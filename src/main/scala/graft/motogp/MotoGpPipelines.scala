@@ -2,7 +2,6 @@ package graft.motogp
 
 import graft.operators.{FuzzyMatch, Ops}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The seven integrated tables of the reference's star schema, composed
@@ -17,8 +16,11 @@ import org.apache.spark.sql.functions._
   *  - Sequence ids (`circuit_id`, `id_race`, `team_id`, `quali_id`,
   *    `race_id`, `id_rider_seq`) are contiguous 1-based. Kettle assigns
   *    them in single-threaded stream arrival order; this port pins each
-  *    to a documented deterministic order (file order for sources, an
-  *    explicit sort where the reference assigns mid-stream).
+  *    to a documented deterministic order (file order for sources, a
+  *    projection of the scan position; an explicit sort where the
+  *    reference assigns mid-stream).
+  *  - Both fuzzy matches (FM1, FM2) score each distinct circuit key once
+  *    and need no synthetic row id (see [[FuzzyMatch.bestMatch]]).
   *  - Case-insensitive Kettle sorts (`cs:N`) become `lower(...)` sort
   *    keys where string order is observable in an output.
   */
@@ -30,12 +32,12 @@ class MotoGpPipelines(spark: SparkSession, paths: MotoGpPaths) {
     MotoGpSources.json(spark, p, s)
 
   /** Contiguous 1-based id in file/stream order (Kettle `Add sequence`
-    * on a source stream) — [[Ops.zipWithIndexFileOrder]], the pure
-    * DataFrame form. The previous `rdd.zipWithIndex` formulation cut
-    * the plan with an ExistingRDD barrier on `resultsBase`, the
-    * race-results FACT table — forfeiting codegen/columnar/AQE on the
-    * hottest input at scale. Same ids: the file-order key is the scan's
-    * own (partition, row) position, which is what zipWithIndex counted.
+    * on a source stream) — [[Ops.zipWithIndexFileOrder]]: one eager job
+    * counts the rows of each scan partition, then the id is a projection
+    * of the scan's own (partition, row) position — what `rdd.zipWithIndex`
+    * counted, without its ExistingRDD barrier on `resultsBase` (the
+    * race-results FACT table) and without a range exchange or window on
+    * every re-execution of the four sourced sequences.
     */
   private def seqIdFileOrder(df: DataFrame, name: String): DataFrame =
     Ops.zipWithIndexFileOrder(df, name)
@@ -113,15 +115,13 @@ class MotoGpPipelines(spark: SparkSession, paths: MotoGpPaths) {
       col("country"), col("pole_position"), col("length"), col("width"),
       col("right_corners"), col("left_corners"), col("longest_straight"),
       col("constructed"), col("modifies"), col("circuit_id"))
-    val main = weatherRaces.withColumn("__row", monotonically_increasing_id())
-    FuzzyMatch.bestMatchById(main, "__row", "circuit_name3",
+    FuzzyMatch.bestMatch(weatherRaces, "circuit_name3",
         lookup, "name_circuit",
         Seq("name_circuit", "lat", "long", "country", "pole_position",
           "length", "width", "right_corners", "left_corners",
           "longest_straight", "constructed", "modifies", "circuit_id"),
         matchCol = "corrispondenza", scoreCol = "valore di misura",
         lookupOrder = Seq(col("circuit_id"))) // Kettle load order = file order
-      .drop("__row")
   }
 
   /** `Select values 6` + `ADD id 2` — the spine with `id_race`.
@@ -262,21 +262,10 @@ class MotoGpPipelines(spark: SparkSession, paths: MotoGpPaths) {
       col("bike_id"), col("team_id"), col("rider_id_1"), col("id_rider_seq"))
 
   /** Podium router (`Filter rows 3*`) + `Group by`..`2 2 2` + 5-way INNER
-    * `Multiway merge join` + `Select values 14`. INNER semantics drop
-    * riders missing any position class — reproduced, not "fixed". */
-  lazy val riderPodiumAgg: DataFrame = {
-    def leg(cond: org.apache.spark.sql.Column, as: String): DataFrame =
-      resultsWithRider.filter(cond).groupBy("rider_id")
-        .agg(count(lit(1)).as(as))
-    riderDim
-      .join(leg(col("position") === 1, "1st_pos"), Seq("rider_id"), "inner")
-      .join(leg(col("position") === 3, "3rd_pos"), Seq("rider_id"), "inner")
-      .join(leg(!col("position").isin(1, 2, 3), "other_pos"), Seq("rider_id"), "inner")
-      .join(leg(col("position") === 2, "2nd_pos"), Seq("rider_id"), "inner")
-      .select(col("rider"), col("rider_id"), col("country"), col("number"),
-        col("1st_pos"), col("3rd_pos"), col("2nd_pos"), col("other_pos"),
-        col("id_rider_seq"))
-  }
+    * `Multiway merge join` + `Select values 14`, folded into one
+    * aggregate — see [[MotoGpPipelines.podiumAgg]]. */
+  lazy val riderPodiumAgg: DataFrame =
+    MotoGpPipelines.podiumAgg(riderDim, resultsWithRider)
 
   /** Participation precursor: MotoGP-only results, word-order-swapped
     * rider_name ("SURNAME GIVEN" → "GIVEN SURNAME"), LEFT quali join on
@@ -331,8 +320,7 @@ class MotoGpPipelines(spark: SparkSession, paths: MotoGpPaths) {
         col("number_1").as("number"), col("country_1").as("country"),
         col("speed"), col("time"), col("race_id"), col("bike_id"),
         col("team_id"), col("quali_id"))
-      .withColumn("__row", monotonically_increasing_id())
-    FuzzyMatch.bestMatchById(joined, "__row", "circuit_name",
+    FuzzyMatch.bestMatch(joined, "circuit_name",
         raceTable.select(col("circuit_name"), col("id_race")),
         "circuit_name", Seq("id_race"),
         matchCol = "corrispondenza", scoreCol = "valore di misura",
@@ -421,4 +409,33 @@ class MotoGpPipelines(spark: SparkSession, paths: MotoGpPaths) {
     "rider" -> riderTable,
     "partecipation" -> partecipation,
     "team_standings" -> teamStandings)
+}
+
+object MotoGpPipelines {
+
+  /** The reference's four podium legs (a filtered `Group by` count per
+    * position class) and their 5-way INNER join with the rider
+    * dimension, as ONE aggregation: each leg is a `count(when(cond, 1))`
+    * column of a single group-by on rider_id, and a rider survives only
+    * if all four counts are > 0 — the INNER semantics, which drop riders
+    * missing any position class (reproduced, not "fixed"). A null
+    * position fails every condition, as it failed every leg's filter,
+    * and a rider_id duplicated in the dimension doubles its results rows
+    * and its output rows exactly as the four joins did. One join to the
+    * dimension replaces four.
+    */
+  def podiumAgg(riderDim: DataFrame, resultsWithRider: DataFrame): DataFrame = {
+    val legs = Seq(
+      "1st_pos" -> (col("position") === 1),
+      "3rd_pos" -> (col("position") === 3),
+      "other_pos" -> !col("position").isin(1, 2, 3),
+      "2nd_pos" -> (col("position") === 2))
+    val aggs = legs.map { case (n, c) => count(when(c, 1)).as(n) }
+    val counts = resultsWithRider.groupBy("rider_id").agg(aggs.head, aggs.tail: _*)
+      .filter(legs.map { case (n, _) => col(n) > 0 }.reduce(_ && _))
+    riderDim.join(counts, Seq("rider_id"), "inner")
+      .select(col("rider"), col("rider_id"), col("country"), col("number"),
+        col("1st_pos"), col("3rd_pos"), col("2nd_pos"), col("other_pos"),
+        col("id_rider_seq"))
+  }
 }

@@ -10,21 +10,23 @@ import org.apache.spark.sql.functions._
   * unfiltered best match, ties resolved to the first lookup row in load
   * order) and append chosen lookup columns plus the match value + score.
   *
-  * Spark plan: broadcast the (small, dimension-sized) lookup side,
-  * cross-join, score with the codegen'd
-  * [[org.apache.spark.sql.JaroWinklerSimilarity]] expression, then pick
-  * the winner per main row with a `max_by` AGGREGATION keyed on
+  * Spark plan: reduce the main side to its DISTINCT lowered match keys,
+  * broadcast the (small, dimension-sized) lookup side, cross-join,
+  * score with the codegen'd
+  * [[org.apache.spark.sql.JaroWinklerSimilarity]] expression, pick the
+  * winner per key with a `max_by` AGGREGATION keyed on
   * `struct(score, -lookupOrder)` — max score wins, ties fall to the
-  * lowest load order, exactly Kettle's first-wins rule. The aggregation
-  * (not a `row_number` window) is the load-bearing choice at scale:
-  * partial (map-side) aggregation collapses each task's |lookup|
-  * candidates down to ONE row per main row before any exchange, so the
-  * shuffle moves |main| rows — a window formulation would exchange the
-  * whole |main| × |lookup| cross product to rank it (for the reference's
-  * FM2 join against 313 races, a 313× amplification of the stream).
+  * lowest load order, exactly Kettle's first-wins rule — and join the
+  * winners back to the main rows on the key. The scored product is
+  * |distinct keys| × |lookup| pairs, however many rows share a key (the
+  * reference's FM2: 66 circuit keys, not ~2,400 participation rows,
+  * against 313 races). The aggregation (not a `row_number` window)
+  * keeps the argmax map-side: partial aggregation collapses each task's
+  * |lookup| candidates to ONE row per key before any exchange, where a
+  * window would exchange the whole scored product to rank it.
   *
   * The cross-join is BroadcastNestedLoopJoin — embarrassingly parallel
-  * over the main side, so it scales linearly with main-side partitions;
+  * over the key side, so it scales linearly with its partitions;
   * the lookup side must be broadcast-sized (dimension tables), which
   * matches every use in the reference (68 circuits, 313 races). The
   * contract is ENFORCED, not advisory: a plan-time row-count guard
@@ -116,39 +118,6 @@ object FuzzyMatch {
         appendCols.distinct.map(c => col(c).as(s"__lk_$c")): _*)
   }
 
-  /** Score the broadcast cross product, then collapse to one winner per
-    * `keyCol` group with max_by. The payload struct carries every output
-    * column through the aggregation; `keyCol` itself need not be in it.
-    * Tie-break ordering: (score asc-for-max, negated load order) — the
-    * struct comparison is field-by-field, so the max is (highest score,
-    * lowest load order). A null score (null main field) sorts below every
-    * real score, matching the previous window's DESC-nulls-last order.
-    */
-  private def bestByKey(withKey: DataFrame, keyCol: String, mainField: String,
-                        mainCols: Seq[String],
-                        lookup: DataFrame, lookupField: String,
-                        appendCols: Seq[String],
-                        matchCol: String, scoreCol: String,
-                        lookupOrder: Seq[Column]): DataFrame = {
-    val keep = appendCols.distinct.filterNot(mainCols.contains)
-    val scored = withKey
-      .crossJoin(broadcast(prepared(lookup, lookupField, appendCols, lookupOrder)))
-      .withColumn("__sim", jaro_winkler(lower(col(mainField)), lower(col("__lk_key"))))
-    val payload = struct(
-      mainCols.map(col) ++
-        keep.map(c => col(s"__lk_$c")) ++
-        Seq(col("__lk_key"), col("__sim")): _*)
-    val best = scored
-      .groupBy(col(keyCol))
-      .agg(max_by(payload,
-        struct(col("__sim").as("s"), (lit(0L) - col("__lk_order")).as("neg_order")))
-        .as("__best"))
-    best.select(mainCols.map(c => col("__best").getField(c).as(c)) ++
-      keep.map(c => col("__best").getField(s"__lk_$c").as(c)) ++
-      Seq(col("__best").getField("__lk_key").as(matchCol),
-        col("__best").getField("__sim").as(scoreCol)): _*)
-  }
-
   /** @param main       large stream
     * @param mainField  column of `main` to match on
     * @param lookup     broadcast-sized lookup table
@@ -161,25 +130,23 @@ object FuzzyMatch {
     *                   explicit sort; empty = deterministic default
     *                   (lookupField, appendCols)
     *
-    * Main-row identity is the row CONTENT, not a synthetic id: duplicate
-    * rows are collapsed to (distinct row, multiplicity) before scoring
-    * and re-expanded after the argmax, so a task retry or AQE replan can
-    * never re-key rows mid-job (a `monotonically_increasing_id` here
-    * could assign different ids on re-execution, splitting or merging
-    * argmax groups). The content groupBy shuffles |main| rows — the same
-    * volume the argmax aggregation already exchanges — and scoring then
-    * touches only DISTINCT rows, which on dirty real-world streams
-    * (repeated header lines, replayed events) shrinks the cross product.
+    * Scoring runs once per DISTINCT `lower(mainField)`, not per row:
+    * the distinct keys cross the broadcast lookup, max_by picks one
+    * winner per key (tie-break struct (score, negated load order) —
+    * field-by-field, so the max is the highest score, then the lowest
+    * load order), and one join hands each winner back to every main row
+    * with that key. Cost: |distinct keys| × |lookup| Jaro-Winkler pairs
+    * plus one join — the reference's FM2 scores 66 circuit keys instead
+    * of every participation row.
     *
-    * Re-expansion is CHUNKED (nested explodes over `expandChunk`-sized
-    * blocks): a single `sequence(1, mult)` would materialize one
-    * in-memory array of `mult` elements per distinct row — a ~1.6 GB
-    * allocation for a row replayed 200M times, on exactly the
-    * high-duplication streams this path exists for.
-    *
-    * Rows containing non-orderable columns (maps) cannot be content-
-    * grouped; they fall back to the synthetic-id formulation, whose
-    * only weakness is duplicate-row identity under a mid-job retry.
+    * Main rows are never keyed by a synthetic id, so a task retry or AQE
+    * replan cannot re-key them mid-job, duplicate rows each keep their
+    * own output row (Kettle emits one per input row), and columns of any
+    * type — maps included — ride through untouched. A null key scores
+    * null against every candidate, so its winner is the first lookup row
+    * in load order with a null score, and the null-safe (`<=>`) join
+    * gives each null-keyed row exactly that one match. The join is
+    * INNER: an empty lookup yields no winners and no rows.
     */
   def bestMatch(main: DataFrame, mainField: String,
                 lookup: DataFrame, lookupField: String,
@@ -187,37 +154,22 @@ object FuzzyMatch {
                 matchCol: String = "match_value",
                 scoreCol: String = "match_score",
                 lookupOrder: Seq[Column] = Seq.empty): DataFrame = {
-    val cols = main.columns.toSeq
-    val groupable = !main.schema.exists(f => hasMap(f.dataType))
-    if (!groupable) {
-      val withId = main.withColumn("__main_row", monotonically_increasing_id())
-      return bestByKey(withId, "__main_row", mainField, cols,
-        lookup, lookupField, appendCols, matchCol, scoreCol, lookupOrder)
-    }
-    val grouped = main.groupBy(cols.map(col): _*)
-      .agg(count(lit(1)).as("__mult"))
-      .withColumn("__main_key", struct(cols.map(col): _*))
-    val best = bestByKey(grouped, "__main_key", mainField, cols :+ "__mult",
-      lookup, lookupField, appendCols, matchCol, scoreCol, lookupOrder)
-    // one output row per input OCCURRENCE (Kettle emits per input row):
-    // outer explode walks whole chunks, inner explode fills each chunk —
-    // peak allocation is one expandChunk-long array, independent of mult
-    val chunk = lit(expandChunk.toLong)
-    best
-      .withColumn("__chunk_i", explode(sequence(lit(0L),
-        floor((col("__mult") - 1) / chunk).cast("long"))))
-      .withColumn("__rep", explode(sequence(lit(1L),
-        least(chunk, col("__mult") - col("__chunk_i") * chunk))))
-      .drop("__chunk_i", "__rep", "__mult")
-  }
-
-  private val expandChunk = 4096
-
-  private def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case _: org.apache.spark.sql.types.MapType => true
-    case s: org.apache.spark.sql.types.StructType => s.exists(f => hasMap(f.dataType))
-    case a: org.apache.spark.sql.types.ArrayType => hasMap(a.elementType)
-    case _ => false
+    val mainCols = main.columns.toSeq
+    val keep = appendCols.distinct.filterNot(mainCols.contains)
+    val payload = struct(
+      keep.map(c => col(s"__lk_$c")) ++ Seq(col("__lk_key"), col("__sim")): _*)
+    val best = main.select(lower(col(mainField)).as("__fm_key")).distinct()
+      .crossJoin(broadcast(prepared(lookup, lookupField, appendCols, lookupOrder)))
+      .withColumn("__sim", jaro_winkler(col("__fm_key"), lower(col("__lk_key"))))
+      .groupBy(col("__fm_key"))
+      .agg(max_by(payload,
+        struct(col("__sim").as("s"), (lit(0L) - col("__lk_order")).as("neg_order")))
+        .as("__best"))
+    main.join(best, lower(col(mainField)) <=> col("__fm_key"), "inner")
+      .select(mainCols.map(col) ++
+        keep.map(c => col("__best").getField(s"__lk_$c").as(c)) ++
+        Seq(col("__best").getField("__lk_key").as(matchCol),
+          col("__best").getField("__sim").as(scoreCol)): _*)
   }
 
   /** Thresholded fuzzy join — the documented NON-BROADCAST path
@@ -243,7 +195,7 @@ object FuzzyMatch {
     * over DISTINCT lowered values, never rows — real corpora are
     * exact-dup heavy (sf0.1 part: 64 names across 20k rows, so a
     * row-level join would re-score every surviving pair ~10⁵×; the
-    * same lesson [[bestMatch]]'s content-grouping learned), and ids
+    * same lesson [[bestMatch]]'s distinct-key scoring learned), and ids
     * re-expand by two hash joins on the lowered value at the end.
     * Shuffles carry (band, sig-char, value) and qualifying value
     * pairs — short match fields by construction; a corpus with long
@@ -403,8 +355,9 @@ object FuzzyMatch {
         col("__ft_orig").as(matchCol), col(scoreCol))
   }
 
-  /** Variant keyed by an explicit unique id on the main side — the
-    * zero-extra-shuffle path when main rows already carry one.
+  /** [[bestMatch]] for callers whose main rows carry a unique id.
+    * Matching never needs a row identity, so `mainId` only names a
+    * column that rides through like any other.
     */
   def bestMatchById(main: DataFrame, mainId: String, mainField: String,
                     lookup: DataFrame, lookupField: String,
@@ -412,6 +365,6 @@ object FuzzyMatch {
                     matchCol: String = "match_value",
                     scoreCol: String = "match_score",
                     lookupOrder: Seq[Column] = Seq.empty): DataFrame =
-    bestByKey(main, mainId, mainField, main.columns.toSeq,
-      lookup, lookupField, appendCols, matchCol, scoreCol, lookupOrder)
+    bestMatch(main, mainField, lookup, lookupField, appendCols,
+      matchCol, scoreCol, lookupOrder)
 }

@@ -164,14 +164,19 @@ object Graph {
     * hang the driver loop forever. Poll the non-blocking view with a
     * deadline and fall back to `direct` (a 1-row aggregate over the
     * already-checkpointed frame — cheap, and arithmetically the same
-    * exact integer sum the metric carries). */
+    * exact integer sum the metric carries). The fallback logs a WARN:
+    * a metric that never arrives points at a listener-bus problem. */
   private def observed(obs: Observation, key: String, direct: => Long): Long = {
-    val deadlineNs = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    val startNs = System.nanoTime()
+    val deadlineNs = startNs + 30L * 1000 * 1000 * 1000
     while (System.nanoTime() < deadlineNs) {
       val m = GraftBridge.observationOrEmpty(obs)
       if (m.nonEmpty) return m(key).asInstanceOf[Long]
       Thread.sleep(2)
     }
+    org.apache.logging.log4j.LogManager.getLogger(getClass.getName.stripSuffix("$")).warn(
+      s"Observation metric '$key' not delivered after " +
+        s"${(System.nanoTime() - startNs) / 1000000} ms; falling back to a direct aggregate")
     direct
   }
 

@@ -119,40 +119,56 @@ object Ops {
     val ranged = df.repartitionByRange(orderBy: _*)
       .withColumn("__zwi_pid", spark_partition_id())
     val counts = ranged.groupBy("__zwi_pid").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val nPart = if (counts.isEmpty) 0 else counts.keys.max + 1
-    val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
-    val offsetOf =
-      if (nPart == 0) lit(0L)
-      else element_at(
-        map_from_arrays(
-          array((0 until nPart).map(lit): _*),
-          array(offsets.take(nPart).map(lit): _*)),
-        col("__zwi_pid"))
+      .collect().map(r => (r.getInt(0).toLong, r.getLong(1))).toMap
     val w = Window.partitionBy(col("__zwi_pid")).orderBy(orderBy: _*)
     ranged
-      .withColumn(as, (row_number().over(w).cast("bigint") + offsetOf))
+      .withColumn(as, row_number().over(w).cast("bigint") +
+        partitionOffset(counts, col("__zwi_pid").cast("bigint")))
       .drop("__zwi_pid")
+  }
+
+  /** The row count of every partition before `pid`, looked up in a
+    * literal map built from per-partition `counts` (absent = empty). */
+  private def partitionOffset(counts: Map[Long, Long], pid: Column): Column = {
+    val nPart = if (counts.isEmpty) 0 else (counts.keys.max + 1).toInt
+    val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p.toLong, 0L))
+    if (nPart == 0) lit(0L)
+    else element_at(
+      map_from_arrays(
+        array((0 until nPart).map(p => lit(p.toLong)): _*),
+        array(offsets.take(nPart).map(lit): _*)),
+      pid)
   }
 
   /** Contiguous 1-based id in FILE order — the pure-DataFrame twin of
     * `rdd.zipWithIndex` for source streams (Kettle `Add sequence` on a
     * file read, motogp.ktr:1204-1344). `monotonically_increasing_id()`
     * evaluated directly above the scan is
-    * `(partitionId << 33) + row-position-in-partition`, so ordering by
-    * it reproduces EXACTLY the order zipWithIndex assigned (partition
-    * index, then arrival within the partition) — while the plan stays
-    * declarative: no ExistingRDD barrier, so whole-stage codegen,
+    * `(partitionId << 33) + row-position-in-partition`, which already IS
+    * file order (partition index, then arrival within the partition). So
+    * one eager job counts the rows of each scan partition, and the id is
+    * a projection: `offset(pid) + position + 1`, the offset being the
+    * row count of all earlier partitions. No sort, exchange or window —
+    * the plan stays declarative above the scan, so whole-stage codegen,
     * columnar scans and AQE survive across the fact table's id
     * assignment. Determinism contract is zipWithIndex's own: stable for
     * a fixed input file set (partition ids are a pure function of the
-    * splits, and lineage re-execution across the range exchange's
-    * sampling pass sees the same ids).
+    * splits, so the counting job and every re-execution see the same
+    * ones).
     */
   def zipWithIndexFileOrder(df: DataFrame, as: String): DataFrame = {
+    import df.sparkSession.implicits._
     val mid = "__zwi_file_mid"
-    zipWithIndexOrdered(df.withColumn(mid, monotonically_increasing_id()),
-      Seq(col(mid)), as).drop(mid)
+    val keyed = df.withColumn(mid, monotonically_increasing_id())
+    val pid = shiftright(col(mid), 33)
+    // a task's rows all share its pid; mapPartitions (not groupBy) keeps
+    // the count free of exchanges, so it is exactly one job
+    val counts = keyed.select(pid).as[Long]
+      .mapPartitions(it => it.nextOption().map(p => p -> (1L + it.size)).iterator)
+      .collect().toMap
+    keyed
+      .withColumn(as, partitionOffset(counts, pid) + col(mid) - shiftleft(pid, 33) + 1L)
+      .drop(mid)
   }
 
   /** Deterministic seeded global shuffle — the epoch-reshuffle primitive

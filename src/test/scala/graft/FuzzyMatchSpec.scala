@@ -1,9 +1,17 @@
 package graft
 
+import graft.functions.JaroWinkler.jaro_winkler
 import graft.operators.FuzzyMatch
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Lower
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-class FuzzyMatchSpec extends SparkSpec {
+class FuzzyMatchSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("bestMatch finds the closest lookup row, case-insensitive") {
@@ -94,9 +102,8 @@ class FuzzyMatchSpec extends SparkSpec {
   }
 
   test("bestMatch multiplicity above the expansion chunk re-expands exactly") {
-    // 5000 > the 4096-row expansion chunk: the nested-explode rebuild
-    // must emit exactly one row per input occurrence, never chunk-sized
-    // over- or under-counts
+    // 5000 copies of one key: the join back must emit exactly one row
+    // per input occurrence
     val main = (Seq.fill(5000)("MUGELLO") ++ Seq("ASSEN")).toDF("name")
     val lookup = Seq((1L, "Mugello"), (2L, "Assen")).toDF("cid", "cname")
     val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"))
@@ -294,5 +301,97 @@ class FuzzyMatchSpec extends SparkSpec {
     val score = FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname", Seq("cid"))
       .select("match_score").as[Double].collect().head
     assert(math.abs(score - graft.functions.JaroWinkler.sim("martha", "marhta")) < 1e-12)
+  }
+
+  /** Brute-force oracle: every main row, tagged with a throwaway id,
+    * crosses every lookup row, and row_number keeps the highest score
+    * (nulls last), then the lowest cid — Kettle's first-wins rule. */
+  private def bruteForce(main: DataFrame, lookup: DataFrame): DataFrame = {
+    val w = Window.partitionBy("__rid")
+      .orderBy(col("match_score").desc_nulls_last, col("cid").asc)
+    main.withColumn("__rid", monotonically_increasing_id())
+      .crossJoin(lookup)
+      .withColumn("match_value", col("cname"))
+      .withColumn("match_score", jaro_winkler(lower(col("name")), lower(col("cname"))))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .select((main.columns ++ Seq("cid", "country", "match_value", "match_score"))
+        .map(col).toIndexedSeq: _*)
+  }
+
+  private def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  // case variants of one key, a content-duplicate row, a null field,
+  // map-typed columns, and two lookup rows tied on score and on cname
+  // (cid 1 and 6) so only load order can pick the winner
+  private def fixtureMain = Seq(
+      (1L, "Mugello", Map("k" -> "a")), (2L, "MUGELLO", Map("k" -> "b")),
+      (3L, "mugello ", Map.empty[String, String]), (4L, "Assen", Map("k" -> "c")),
+      (5L, "Assen", Map("k" -> "c")), (6L, null, Map("k" -> "d")),
+      (7L, "ab", Map.empty[String, String]), (8L, "zzz", Map("z" -> "z")))
+    .toDF("id", "name", "props")
+  private def fixtureLookup = Seq(
+      (6L, "mugello", "IT2"), (1L, "Mugello", "IT"), (2L, "Assen", "NL"),
+      (3L, "Circuito de Jerez", "ES"), (4L, "ax", "X"), (5L, "xb", "Y"))
+    .toDF("cid", "cname", "country")
+
+  test("bestMatch and bestMatchById equal the brute-force cross join + row_number") {
+    val lookup = fixtureLookup
+    def check(main: DataFrame): Unit = {
+      val want = bag(bruteForce(main, lookup))
+      assert(want.values.sum == main.count())
+      val got = bag(FuzzyMatch.bestMatch(main, "name", lookup, "cname",
+        Seq("cid", "country"), lookupOrder = Seq(col("cid"))))
+      assert(got == want, s"missing=${want.keySet -- got.keySet} extra=${got.keySet -- want.keySet}")
+      if (main.columns.contains("id"))
+        assert(bag(FuzzyMatch.bestMatchById(main, "id", "name", lookup, "cname",
+          Seq("cid", "country"), lookupOrder = Seq(col("cid")))) == want)
+    }
+    check(fixtureMain)
+    // identical rows (no id) and a multiplicity above 4,096
+    val dups = fixtureMain.drop("id")
+    check(dups.union(dups).repartition(3))
+    check(Seq.fill(5000)("MUGELLO").toDF("name").union(Seq("ab").toDF("name")))
+    // the tied pair resolves to load order: cid 1 over cid 6, cid 4 over 5
+    val picked = FuzzyMatch.bestMatch(fixtureMain, "name", lookup, "cname",
+        Seq("cid"), lookupOrder = Seq(col("cid")))
+      .select("id", "cid").as[(Long, Long)].collect().toMap
+    assert(picked(1L) == 1L && picked(2L) == 1L && picked(7L) == 4L, picked)
+    // a null main field still gets exactly one row, with a null score
+    val nul = FuzzyMatch.bestMatch(fixtureMain, "name", lookup, "cname", Seq("cid"),
+      lookupOrder = Seq(col("cid"))).filter(col("id") === 6L).collect()
+    assert(nul.length == 1 && nul.head.isNullAt(nul.head.fieldIndex("match_score")))
+  }
+
+  test("bestMatch over an empty lookup yields zero rows, like the cross-join oracle") {
+    val empty = fixtureLookup.filter(lit(false))
+    assert(bruteForce(fixtureMain, empty).count() == 0)
+    assert(FuzzyMatch.bestMatch(fixtureMain, "name", empty, "cname", Seq("cid")).count() == 0)
+    assert(FuzzyMatch.bestMatchById(fixtureMain, "id", "name", empty, "cname",
+      Seq("cid")).count() == 0)
+  }
+
+  test("bestMatch scores distinct lowered keys, not rows: pairs = |keys| x |lookup|") {
+    val main = (Seq.fill(200)("MUGELLO") ++ Seq.fill(100)("mugello") ++
+      Seq.fill(50)("Assen") ++ Seq("jerez")).toDF("name").repartition(4)
+    val lookup = fixtureLookup
+    val out = FuzzyMatch.bestMatch(main, "name", lookup, "cname", Seq("cid"))
+    assert(out.collect().length == 351) // runs this plan, filling its metrics
+    val joins = collect(out.queryExecution.executedPlan) {
+      case j: BroadcastNestedLoopJoinExec => j
+    }
+    assert(joins.size == 1, out.queryExecution.executedPlan)
+    val j = joins.head
+    assert(j.buildSide == BuildRight, j)
+    // the streamed side is an aggregate keyed on the lowered match field
+    val agg = j.left match {
+      case a: BaseAggregateExec => a
+      case other => fail(s"streamed side is not an aggregate:\n$other")
+    }
+    assert(agg.groupingExpressions.map(_.name) == Seq("__fm_key"), agg)
+    assert(find(agg)(_.expressions.exists(_.exists(_.isInstanceOf[Lower]))).isDefined, agg)
+    // 3 distinct lowered keys (mugello, assen, jerez) x 6 lookup rows
+    assert(j.metrics("numOutputRows").value == 3L * 6L)
   }
 }

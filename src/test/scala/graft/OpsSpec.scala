@@ -89,6 +89,48 @@ class OpsSpec extends SparkSpec {
     assert(out.select("id").as[Long].collect().sorted.toSeq == (1L to 100L))
   }
 
+  test("zipWithIndexFileOrder: file-order ids 1..n from a projection, built in one job") {
+    val dir = java.nio.file.Files.createTempDirectory("zwi-file-order")
+    // three files of distinct lines plus one empty file; a small split
+    // size cuts the non-empty files into several partitions each
+    for ((rows, f) <- Seq(40, 0, 25, 60).zipWithIndex)
+      java.nio.file.Files.write(dir.resolve(s"part-$f.txt"),
+        (0 until rows).map(i => f"f$f%d-row$i%03d\n").mkString.getBytes("UTF-8"))
+    val conf = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(conf)
+    spark.conf.set(conf, "256")
+    try {
+      val df = spark.read.text(dir.toString)
+      assert(df.rdd.getNumPartitions >= 4, df.rdd.getNumPartitions)
+      @volatile var jobs = 0
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs += 1
+      }
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val out = try {
+        val built = Ops.zipWithIndexFileOrder(df, "id")
+        org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+        built
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs == 1, s"building the ids ran $jobs jobs")
+
+      val got = out.select("value", "id").as[(String, Long)].collect().toSeq
+      val want = df.rdd.zipWithIndex().map { case (r, i) => (r.getString(0), i + 1) }
+        .collect().toSeq
+      assert(got.size == 125)
+      assert(got.map(_._2) == (1L to 125L))
+      assert(got == want)
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("RangePartitioning") && !plan.contains("Window"), plan)
+    } finally {
+      prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+      java.nio.file.Files.list(dir).forEach(java.nio.file.Files.delete(_))
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("saltedJoin equals the plain join (inner and left)") {
     val left = (1 to 50).map(i => (i % 3, s"l$i")).toDF("k", "lv")
     val right = Seq((0, "r0"), (1, "r1"), (5, "r5")).toDF("k", "rv")
